@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # Every table in the driver-generated corpus (TESTDATA.md).
@@ -142,3 +142,15 @@ def spread(df: DataFrame, key: str | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target, F.col(key)) if key else df.repartition(target)
+
+
+def barrier(df: DataFrame, **cols: Column) -> DataFrame:
+    """Materialize ``cols`` behind one Generate node,
+    ``inline(array(struct(...)))``, so downstream filters and lambdas
+    read attribute references, not re-inlined expression trees.
+    CollapseProject cannot merge across a Generate: behind a plain
+    alias, a filter re-evaluates the whole expression tree per
+    predicate (r18; the duplicated trees showed as 600+-char Filter
+    conditions in the committed plans)."""
+    named = [c.alias(name) for name, c in cols.items()]
+    return df.select("*", F.inline(F.array(F.struct(*named))))

@@ -189,16 +189,3 @@ def save_config(cfg: EngineConfig, path: str) -> None:
     os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
     with open(path, "w") as fh:
         json.dump(raw, fh, indent=4, sort_keys=True)
-
-
-def get_spark_from_config(path: str, **kwargs):
-    """One-call bootstrap: config file → tuned SparkSession. Explicit
-    ``extra_conf`` entries passed by the caller win over config-file
-    values, and the caller's dict is never mutated."""
-    from chronobase_spark.session import get_spark
-
-    cfg = load_config(path)
-    merged = dict(cfg.to_spark_conf())
-    merged.update(kwargs.get("extra_conf") or {})
-    kwargs["extra_conf"] = merged
-    return get_spark(**kwargs)

@@ -17,8 +17,13 @@ A reference user's program maps directly:
                               chronobase_spark.streaming is the bulk path)
 
 Storage model: one directory per table (the reference's layout,
-db.go:291-350) of date-partitioned parquet, sorted within partitions by
-(ts, key) — the tablet sort order (tablet.go:124-132). The driver-side
+db.go:291-350) whose ``data`` directory holds the one time-partitioned
+layout that ``sources/writers.py`` owns: day-bucket partition
+directories, sorted within partitions by (ts, key) — the tablet sort
+order (tablet.go:124-132). The streaming sink writes the same layout,
+so a table filled by ``streaming.ingest.start_ingest`` under
+``<data_dir>/<table>/data`` is queried, compacted and cleaned up here
+like one filled through ``insert``/``insert_df``. The Python-side
 row buffer mirrors the reference's in-process memtable (table.go:17):
 ``query`` unions it with the durable partitions exactly like the
 reference's memtable ∪ disk-tablets scan (table.go:132-161). Bulk
@@ -37,11 +42,10 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from chronobase_spark.operators import timeseries
-from chronobase_spark.sources.writers import write_time_partitioned
+from chronobase_spark.sources import writers
 from chronobase_spark.streaming import maintenance
 
 _META = "_table_meta.json"
-_PARTITION_COL = "_bucket"
 
 
 class TableNotFoundError(KeyError):
@@ -222,9 +226,9 @@ class ChronoSpark:
 
     def insert_df(self, table: str, df: DataFrame) -> None:
         """Bulk append straight to durable storage (the scale path) in
-        the canonical layout: date-partitioned, sorted by (ts, key)."""
+        the time-partitioned layout of ``sources/writers.py``."""
         self._require(table)
-        write_time_partitioned(df, str(self.root / table / "data"), mode="append")
+        writers.write_time_partitioned(df, str(self.root / table / "data"))
 
     def flush(self, table: str | None = None) -> int:
         """Write buffered rows as durable sorted partitions — the
@@ -261,12 +265,8 @@ class ChronoSpark:
             # [MinTS,MaxTS] skip, table.go:146-149, at directory
             # granularity); the row-level ts predicate then prunes row
             # groups within the surviving partitions
-            df = df.filter(
-                F.col(_PARTITION_COL).between(
-                    F.lit(start.date().isoformat()), F.lit(end.date().isoformat())
-                )
-            )
-        return df.drop(_PARTITION_COL)
+            df = df.filter(writers.bucket_filter(start, end))
+        return df.drop(writers.PARTITION_COL)
 
     @staticmethod
     def _as_dt(value: str | dt.datetime) -> dt.datetime:
@@ -391,24 +391,16 @@ class ChronoSpark:
 
     # -- maintenance (db.go:195-288) -----------------------------------
 
-    def compact(self, table: str, target_files: int = 1) -> int:
-        """Compact every partition of a table (reference merge,
-        table.go:240-331, without its pairwise restart loop)."""
+    def compact(self, table: str) -> int:
+        """Compact every partition of a table to one file (reference
+        merge, table.go:240-331, without its pairwise restart loop).
+        Returns the row count compacted."""
         self._require(table)
-        data_dir = self.root / table / "data"
-        total = 0
-        if not data_dir.exists():
-            return 0
-        for part in sorted(data_dir.iterdir()):
-            if part.is_dir() and part.name.startswith(f"{_PARTITION_COL}="):
-                total += maintenance.compact_partition(
-                    self.spark,
-                    str(data_dir),
-                    part.name.split("=", 1)[1],
-                    target_files=target_files,
-                    partition_col=_PARTITION_COL,
-                )
-        return total
+        data_dir = str(self.root / table / "data")
+        return sum(
+            maintenance.compact_partition(self.spark, data_dir, value)
+            for value in writers.partitions(data_dir)
+        )
 
     def cleanup(self, table: str, now: dt.datetime | None = None) -> list[str]:
         """TTL retention (reference cleanup, table.go:334-369): drop whole
@@ -420,9 +412,7 @@ class ChronoSpark:
         now = now or dt.datetime.utcnow()
         cutoff = now - dt.timedelta(seconds=ttl)
         dropped = maintenance.retention_sweep(
-            str(self.root / table / "data"),
-            cutoff.date().isoformat(),
-            partition_col=_PARTITION_COL,
+            str(self.root / table / "data"), writers.bucket_value(cutoff)
         )
         self._memtable[table] = [
             r for r in self._memtable[table] if r["ts"] > cutoff

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from chronobase_spark.catalog import barrier, spread
+
 # Tiny English stopword list for quality scoring (public knowledge).
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
@@ -58,24 +60,6 @@ def distinct_token_count(text: Column) -> Column:
 
 def _stop_count(tk: Column) -> Column:
     return F.size(F.filter(tk, lambda t: t.isin(*STOPWORDS)))
-
-
-def stopword_ratio(text: Column) -> Column:
-    return with_tokens(
-        text,
-        lambda tk: _stop_count(tk).cast("double")
-        / F.greatest(F.size(tk), F.lit(1)).cast("double"),
-    )
-
-
-def avg_token_length(text: Column) -> Column:
-    return with_tokens(
-        text,
-        lambda tk: F.aggregate(
-            tk, F.lit(0), lambda acc, t: acc + F.length(t)
-        ).cast("double")
-        / F.greatest(F.size(tk), F.lit(1)).cast("double"),
-    )
 
 
 def bigram_dup_stats(text: Column) -> Column:
@@ -163,31 +147,6 @@ def token_features(text: Column) -> Column:
             ).alias("stop_ratio"),
         ),
     )
-
-
-def quality_score(text: Column) -> Column:
-    """Heuristic document quality in [0, 1]: rewards moderate length,
-    lexical diversity, and a sane stopword ratio — the standard cheap
-    pre-filter in LLM training-data pipelines. Deterministic closed-form
-    arithmetic (same formula runs in the SQL oracle); one tokenization
-    pass via the token binding."""
-
-    def score(tk: Column) -> Column:
-        n = F.size(tk).cast("double")
-        diversity = F.size(F.array_distinct(tk)).cast("double") / F.greatest(
-            n, F.lit(1.0)
-        )
-        length_score = F.least(n / F.lit(50.0), F.lit(1.0))
-        stop = _stop_count(tk).cast("double") / F.greatest(n, F.lit(1.0))
-        stop_score = F.lit(1.0) - F.abs(stop - F.lit(0.2))
-        return F.round(
-            F.lit(0.4) * length_score
-            + F.lit(0.4) * diversity
-            + F.lit(0.2) * stop_score,
-            6,
-        )
-
-    return with_tokens(text, score)
 
 
 def fingerprint(text: Column) -> Column:
@@ -700,8 +659,6 @@ def _doc_bigram_tf(docs, id_col: str, text_col: str):
     gram-assembly explode serializes on an unsplittable scan
     (interleaved A/B at sf0.1: 0.58 s → 0.20 s, r17,
     scripts/ab_spread2_r17.py)."""
-    from chronobase_spark.catalog import spread
-
     docs = spread(docs, key=id_col)
     # NO pre-filter here (r18, measured): the explode's generator input
     # is the inline gram EXPRESSION, not an aliased column, and Spark 4
@@ -718,17 +675,6 @@ def _doc_bigram_tf(docs, id_col: str, text_col: str):
         .groupBy(id_col, "gram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-
-
-def _expr_barrier(df, **cols):
-    """Materialize ``cols`` behind one Generate node (the dedup/cdc
-    _barrier convention): a filter on a plain column alias is inlined
-    by CollapseProject and re-evaluates the whole expression tree per
-    predicate — behind inline(array(struct)) the filter reads the
-    materialized attribute instead (r18; the duplicated trees were
-    visible as 600+-char Filter conditions in the committed plans)."""
-    named = [c.alias(name) for name, c in cols.items()]
-    return df.select("*", F.inline(F.array(F.struct(*named))))
 
 
 def _lm_vocab(gram_counts, docs, text_col: str):
@@ -749,11 +695,11 @@ def _lm_vocab(gram_counts, docs, text_col: str):
     redundant second corpus pass in the suite's slowest query
     (q_bigram_lm_logprob r9 bench 6.5 s)."""
     tk = lm_tokens(F.col(text_col))
-    # _expr_barrier: the isNotNull used to inline the tokenize + get
+    # catalog.barrier: the isNotNull used to inline the tokenize + get
     # tree and re-run it as the pushed predicate (2 tokenize per row on
     # the scan side); behind the Generate it reads the attribute.
     last = (
-        _expr_barrier(docs, t=F.get(tk, F.size(tk) - 1))
+        barrier(docs, t=F.get(tk, F.size(tk) - 1))
         .where(F.col("t").isNotNull())
         .select("t")
     )
@@ -785,24 +731,6 @@ def _lm_from_gram_counts(gram_counts, vocab):
             .cast("bigint")
             .alias("term_micro"),
         )
-    )
-
-
-def bigram_lm_table(docs, text_col: str = "text"):
-    """Train the add-one-smoothed bigram LM: returns (gram,
-    term_micro) with term_micro = round(ln((c12+1)/(c1+V))·1e6) as
-    BIGINT — the frozen model table ``bigram_lm_scores`` joins against
-    in batch and ``streaming.docs.lm_score_stage`` joins against
-    stream-static. Gram-type sized (bounded by the corpus' distinct
-    bigrams), so it shuffles on the gram/word keys and never
-    broadcasts."""
-    gram_counts = (
-        docs.select(F.explode(lm_grams(F.col(text_col))).alias("gram"))
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("c12"))
-    )
-    return _lm_from_gram_counts(
-        gram_counts, _lm_vocab(gram_counts, docs, text_col)
     )
 
 
@@ -855,8 +783,6 @@ def lm_trigrams(text_col: Column) -> Column:
 def _doc_trigram_tf(docs, id_col: str, text_col: str):
     """(id, gram, tf): per-document trigram term frequencies — the
     _doc_bigram_tf shape one order up (incl. its r17 input spread)."""
-    from chronobase_spark.catalog import spread
-
     docs = spread(docs, key=id_col)
     # no pre-filter — the _doc_bigram_tf r18 measurement one order up
     # (no inferred filter exists for the inline-expression explode; an
@@ -902,14 +828,14 @@ def _jm_marginals(tri_counts, docs, text_col: str):
         F.substring_index("gram", " ", -2).alias("b"),
         F.col("c123").alias("cnt"),
     )
-    # _expr_barrier on both correction sides (r18): the isNotNull
+    # catalog.barrier on both correction sides (r18): the isNotNull
     # predicates (and the bc join's inferred substring_index notnull)
     # used to inline the first-gram when-trees and re-tokenize every
     # doc up to 3× in the pushed Filter (the 663-char conditions in
     # the committed r17/r18-before plans); behind the Generate the
     # predicates read the materialized attribute.
     first_b = (
-        _expr_barrier(
+        barrier(
             docs,
             b=F.when(
                 F.size(tk) >= 2,
@@ -939,7 +865,7 @@ def _jm_marginals(tri_counts, docs, text_col: str):
         F.col("c123").alias("cnt"),
     )
     first_w = (
-        _expr_barrier(
+        barrier(
             docs,
             _w2=F.filter(
                 F.array(F.get(tk, 0), F.get(tk, 1)),
@@ -1156,8 +1082,6 @@ def _dsir_doc_buckets(docs, target_lang: str, id_col: str, text_col: str,
     explode + per-gram md5 bucket serializes on an unsplittable scan
     (interleaved A/B at sf0.1: 0.72 s → 0.26 s, r17,
     scripts/ab_spread2_r17.py)."""
-    from chronobase_spark.catalog import spread
-
     docs = spread(docs, key=id_col)
     is_t = (F.col(lang_col) == target_lang).cast("int").alias("is_t")
     return (

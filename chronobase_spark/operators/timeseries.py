@@ -141,16 +141,6 @@ def table_stats(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     )
 
 
-def sorted_scan(
-    df: DataFrame, ts_col: str = "ts", key_col: str = "event_id"
-) -> DataFrame:
-    """Full scan in (ts, key) order — the reference's tablet sort order
-    (tablet.go:124-132) exposed as a query-level guarantee the reference
-    itself never provided (its multi-tablet results are unordered,
-    table.go:132-161)."""
-    return df.orderBy(F.col(ts_col), F.col(key_col))
-
-
 def gap_fill_locf(
     df: DataFrame,
     key_col: str,

@@ -6310,7 +6310,7 @@ def q_quality_signal_corr(spark, sf_dir):
     char_entropy A/B, r17)."""
     docs = catalog.spread(_t(spark, sf_dir, "documents"), key="doc_id")
     ntok = text.space_distinct_tokens(F.col("text")).cast("bigint")
-    # inline(array(struct)) = the Generate barrier (dedup/cdc._barrier
+    # inline(array(struct)) = the Generate barrier (catalog.barrier
     # convention, r18): a plain alias let the isNotNull filter inline
     # the WHOLE char-entropy sorted fold and re-evaluate it per row
     # (the 1480-char Filter condition in the r17 plans — the heaviest
@@ -9324,7 +9324,7 @@ def q_dedup_strategy_compare(spark, sf_dir):
             )
         )
     )
-    # Generate barrier (dedup/cdc._barrier convention, r18): the store
+    # Generate barrier (catalog.barrier convention, r18): the store
     # side's distinct dh feeds a join, and the inferred join-key
     # isnotnull used to inline md5(text) and re-hash every store doc in
     # the Filter; behind the barrier it reads the materialized column.
@@ -9764,7 +9764,7 @@ def q_boilerplate_templates(spark, sf_dir):
     # template_stage emits (functions/text.template_end_hashes) — NULL
     # fields for short docs, which the filters below drop exactly like
     # the former explicit size gate. inline(array(struct)) = the
-    # Generate barrier (dedup/cdc._barrier convention, r18): a plain
+    # Generate barrier (catalog.barrier convention, r18): a plain
     # `_e` alias let CollapseProject inline the tokenize+2×md5 struct
     # into BOTH branch filters and BOTH field extractions — up to four
     # evaluations per row (the 500+-char Filter conditions in the r17

@@ -1,8 +1,18 @@
-"""Batch writers — the engine's canonical table layout.
+"""Batch writers, and the one time-partitioned table layout.
 
-The write conventions ARE the optimizer story at 100 TB (SURVEY.md §4):
-(1) partition by a time bucket → partition pruning for time-range scans
-    (the reference's tablet [MinTS,MaxTS] skip, table.go:146-149);
+This module owns the layout that every time-series table in the engine
+shares: the ChronoSpark facade's tables (``db.py``), the streaming sink
+(``streaming/ingest.start_ingest``), compaction and retention
+(``streaming/maintenance``), and backfills. Those modules name the
+layout only through ``PARTITION_COL``, :func:`bucket_value`,
+:func:`bucket_filter`, :func:`partitions` and :func:`sort_keys`; none
+of them spells it out. The layout is also the optimizer story at
+100 TB (SURVEY.md §4):
+
+(1) partition by the day bucket of ``ts`` into ``_bucket=<date>``
+    directories → partition pruning for time-range scans (the
+    reference's tablet [MinTS,MaxTS] skip, table.go:146-149), and TTL
+    cleanup by whole-directory removal;
 (2) sort within partitions by (ts, key) → tight parquet row-group
     min/max stats (the reference's tablet sort, tablet.go:124-132);
 (3) zstd columnar compression (vs. the reference's per-block gzip
@@ -11,33 +21,81 @@ The write conventions ARE the optimizer story at 100 TB (SURVEY.md §4):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import datetime as dt
+from pathlib import Path
+
+from pyspark.sql import Column, DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
 
+#: Partition column of every time-partitioned table: the day bucket of
+#: ``ts``, so each partition directory is one day.
+PARTITION_COL = "_bucket"
 
-def write_time_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    key_col: str = "event_id",
-    bucket: str = "day",
-    mode: str = "append",
-) -> None:
-    """Write a time-series table in the engine's canonical layout.
 
-    Sort tie-break: ``key_col`` when the schema has it, else ``key``
-    (the reference's Row.Key, row.go:6-10), else timestamp alone — the
-    facade accepts arbitrary row schemas, not just the test corpus.
-    """
-    if key_col not in df.columns:
-        key_col = "key" if "key" in df.columns else None
-    sort_cols = [ts_col] + ([key_col] if key_col else [])
-    bucket_col = F.to_date(ts_col) if bucket == "day" else F.date_trunc(bucket, ts_col)
+def bucket_value(ts: dt.datetime) -> str:
+    """The partition value (ISO date) holding rows stamped ``ts`` — the
+    Python-side twin of the day-bucket expression the writers apply."""
+    return ts.date().isoformat()
+
+
+def bucket_filter(start: dt.datetime, end: dt.datetime) -> Column:
+    """Partition-pruning predicate for the buckets that can hold rows in
+    [start, end]: whole directories are skipped before any file opens."""
+    return F.col(PARTITION_COL).between(
+        F.lit(bucket_value(start)), F.lit(bucket_value(end))
+    )
+
+
+def sort_keys(columns: list[str]) -> list[str]:
+    """In-partition sort order: ``ts``, then ``event_id`` when the
+    schema has it, else ``key`` (the reference's Row.Key, row.go:6-10),
+    else ``ts`` alone — the facade accepts arbitrary row schemas, not
+    just the event corpus."""
+    key = next((c for c in ("event_id", "key") if c in columns), None)
+    return ["ts", key] if key else ["ts"]
+
+
+def partitions(table_dir: str) -> dict[str, Path]:
+    """Partition value → directory of a time-partitioned table, in
+    value order; empty when the table has no data yet. Dot-prefixed
+    staging directories (see ``maintenance.compact_partition``) are not
+    partitions."""
+    root = Path(table_dir)
+    if not root.exists():
+        return {}
+    prefix = f"{PARTITION_COL}="
+    return {
+        child.name[len(prefix):]: child
+        for child in sorted(root.iterdir())
+        if child.is_dir() and child.name.startswith(prefix)
+    }
+
+
+def _time_partitioned(df: DataFrame) -> DataFrameWriter:
+    """``df`` with the layout's day bucket and sort, as a writer."""
+    return (
+        df.withColumn(PARTITION_COL, F.to_date("ts"))
+        .sortWithinPartitions(*sort_keys(df.columns))
+        .write.partitionBy(PARTITION_COL)
+    )
+
+
+def write_time_partitioned(df: DataFrame, path: str, mode: str = "append") -> None:
+    """Write a time-series table in the layout above."""
+    _time_partitioned(df).mode(mode).parquet(path)
+
+
+def overwrite_time_partitions(df: DataFrame, path: str) -> None:
+    """Idempotent backfill: dynamic partition overwrite replaces ONLY
+    the time buckets present in ``df``, leaving every other partition
+    untouched — re-running a day's pipeline is safe at any scale, and
+    no job ever rewrites the whole table. (Static overwrite mode — the
+    Spark default — would truncate the table first; always scope
+    overwrites to the partitions in hand.)"""
     (
-        df.withColumn("_bucket", bucket_col)
-        .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .partitionBy("_bucket")
+        _time_partitioned(df)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .parquet(path)
     )
 
@@ -383,27 +441,3 @@ def ensure_bucketed(
             "(write_bucketed or a *_bucketed model builder)"
         )
     return spark.table(table_name)
-
-
-def overwrite_time_partitions(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    key_col: str = "event_id",
-    bucket: str = "day",
-) -> None:
-    """Idempotent backfill: dynamic partition overwrite replaces ONLY
-    the time buckets present in ``df``, leaving every other partition
-    untouched — re-running a day's pipeline is safe at any scale, and
-    no job ever rewrites the whole table. (Static overwrite mode — the
-    Spark default — would truncate the table first; always scope
-    overwrites to the partitions in hand.)"""
-    bucket_col = F.to_date(ts_col) if bucket == "day" else F.date_trunc(bucket, ts_col)
-    (
-        df.withColumn("_bucket", bucket_col)
-        .sortWithinPartitions(ts_col, key_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_bucket")
-        .parquet(path)
-    )

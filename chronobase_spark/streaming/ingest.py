@@ -6,9 +6,12 @@ Reference lifecycle → Spark mapping (SURVEY.md §1.2):
   time-bounded, compressed tablet (reference internal/storage/
   table.go:78-119, 198-236; tablet.go:203-281).  Spark-natively the
   memtable IS the micro-batch: ``readStream → writeStream`` with a
-  processing-time trigger; the sink writes Parquet partitioned by a
-  time bucket (the "tablet" directory) sorted within partitions by
-  (ts, key) (the reference's tablet sort order, tablet.go:124-132).
+  processing-time trigger; the sink writes each micro-batch in the one
+  time-partitioned layout that ``sources/writers.py`` owns (day-bucket
+  partition directories, sorted within partitions by (ts, key) — the
+  reference's tablet sort order, tablet.go:124-132). The batch writers,
+  compaction, retention and the ChronoSpark facade share that layout,
+  so a streamed table is a facade table.
 * the TTL ingest gate — rows older than TTL at arrival are silently
   dropped (table.go:93-96) — becomes a watermark + filter per
   micro-batch.
@@ -16,10 +19,10 @@ Reference lifecycle → Spark mapping (SURVEY.md §1.2):
   aggregations; the reference's crude drop-at-ingest is kept as an
   explicit, testable filter.
 
-At 100 TB the date/hour partitioning keeps every time-range query
-pruning whole directories, and each micro-batch file lands with footer
-min/max stats on ts — exactly the per-tablet [MinTS,MaxTS] index the
-reference maintained by hand (internal/storage/index.go:14-20).
+At 100 TB the day partitioning keeps every time-range query pruning
+whole directories, and each micro-batch file lands with footer min/max
+stats on ts — exactly the per-tablet [MinTS,MaxTS] index the reference
+maintained by hand (internal/storage/index.go:14-20).
 """
 
 from __future__ import annotations
@@ -36,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from chronobase_spark.sources.writers import write_time_partitioned
 
 EVENT_SCHEMA = StructType(
     [
@@ -78,23 +83,22 @@ def start_ingest(
 ) -> StreamingQuery:
     """Micro-batch Parquet sink = the reference's flush (table.go:198-236).
 
-    Each batch is bucketed by event date (tablet time range), sorted
-    within partitions by (ts, event_id) (tablet sort order), and written
-    append-only — immutable files, like flushed tablets. Exactly-once via
-    the checkpoint + file-sink log replaces the reference's atomic
-    temp-file rename (utils/fileutils.go:87-103).
+    Each batch goes through ``sources.writers.write_time_partitioned``
+    (the one time-partitioned layout: day buckets = tablet time ranges,
+    sorted by (ts, key) = tablet sort order) and is written append-only
+    — immutable files, like flushed tablets. Point ``table_dir`` at
+    ``<data_dir>/<table>/data`` of a ChronoSpark table and the facade
+    queries, compacts and cleans it up. The checkpoint records which
+    source files each batch consumed, in place of the reference's
+    atomic temp-file rename (utils/fileutils.go:87-103); a foreachBatch
+    sink is at-least-once, so a batch replayed after a crash between
+    its write and its commit is appended again.
     """
-    bucketed = stream.withColumn("event_date", F.to_date("ts"))
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.sortWithinPartitions("ts", "event_id")
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(table_dir)
-        )
+        write_time_partitioned(batch, table_dir)
 
-    writer = bucketed.writeStream.foreachBatch(write_batch).option(
+    writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir
     )
     if available_now:

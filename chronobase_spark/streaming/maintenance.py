@@ -7,13 +7,17 @@ runs periodically:
 
 * **compact**: the reference merges time-adjacent small tablets pairwise
   with an O(n²) restart loop (table.go:240-331, 517-552). Spark-native
-  compaction reads one time-bucket partition, re-sorts, and rewrites it
-  as few large files — per-partition, parallel across partitions, no
-  pairwise loop.
+  compaction reads one day partition, re-sorts, and rewrites it as one
+  file — per-partition, no pairwise loop.
 * **retention**: the reference drops whole tablets older than TTL and
   filters the memtable (table.go:334-369). Spark-native retention drops
   whole partition directories (a metadata/file operation — no data
   scan) for buckets entirely past the cutoff.
+
+Both work on the one time-partitioned layout that
+``sources/writers.py`` owns (partition column, day bucket, sort keys),
+so they serve the streaming sink's tables and the ChronoSpark facade's
+alike.
 """
 
 from __future__ import annotations
@@ -23,17 +27,13 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+from chronobase_spark.sources.writers import PARTITION_COL, partitions, sort_keys
 
-def compact_partition(
-    spark: SparkSession,
-    table_dir: str,
-    partition_value: str,
-    target_files: int = 1,
-    partition_col: str = "event_date",
-) -> int:
-    """Rewrite one time-bucket partition into ``target_files`` sorted
-    files (reference merge, table.go:240-331 — minus its restart loop).
-    Returns the row count compacted.
+
+def compact_partition(spark: SparkSession, table_dir: str, partition_value: str) -> int:
+    """Rewrite one day partition into one sorted file (reference merge,
+    table.go:240-331 — minus its restart loop). Returns the row count
+    compacted.
 
     Write is staged to a temp dir then swapped in, preserving the
     crash-safety intent of the reference's atomic rename
@@ -48,9 +48,10 @@ def compact_partition(
     for the next run to reclaim.
     """
     root = Path(table_dir)
-    part_dir = root / f"{partition_col}={partition_value}"
-    staged = root / f".compact_new_{partition_col}={partition_value}"
-    old = root / f".compact_old_{partition_col}={partition_value}"
+    name = f"{PARTITION_COL}={partition_value}"
+    part_dir = root / name
+    staged = root / f".compact_new_{name}"
+    old = root / f".compact_old_{name}"
     # Crash recovery, in dependency order. A previous run can only have
     # died in one of three states:
     #  * after rename-old but before rename-new: part_dir missing, the
@@ -69,8 +70,8 @@ def compact_partition(
     df = spark.read.parquet(str(part_dir))
     n = df.count()
     (
-        df.repartition(target_files)
-        .sortWithinPartitions("ts", "event_id")
+        df.repartition(1)
+        .sortWithinPartitions(*sort_keys(df.columns))
         .write.mode("overwrite")
         .parquet(str(staged))
     )
@@ -80,22 +81,14 @@ def compact_partition(
     return n
 
 
-def retention_sweep(
-    table_dir: str, cutoff_date: str, partition_col: str = "event_date"
-) -> list[str]:
+def retention_sweep(table_dir: str, cutoff_date: str) -> list[str]:
     """Drop partitions strictly older than ``cutoff_date`` (reference TTL
     cleanup, table.go:334-369). Whole-directory removal — the analog of
     dropping whole tablets by MaxTS, no row-level scan. Returns dropped
     partition values."""
     dropped = []
-    root = Path(table_dir)
-    if not root.exists():
-        return dropped
-    for child in sorted(root.iterdir()):
-        if not child.is_dir() or not child.name.startswith(f"{partition_col}="):
-            continue
-        value = child.name.split("=", 1)[1]
+    for value, part_dir in partitions(table_dir).items():
         if value < cutoff_date:
-            shutil.rmtree(child)
+            shutil.rmtree(part_dir)
             dropped.append(value)
     return dropped

@@ -14,7 +14,13 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import functions as F  # noqa: E402
+
+from chronobase_spark import catalog  # noqa: E402
 from chronobase_spark.db import ChronoSpark, TableExistsError, TableNotFoundError  # noqa: E402
+from chronobase_spark.sources import writers  # noqa: E402
+from chronobase_spark.streaming import ingest  # noqa: E402
+from tests.conftest import SF_SMOKE  # noqa: E402
 
 NOW = dt.datetime(2024, 6, 15, 12, 0, 0)
 
@@ -126,6 +132,60 @@ def test_query_prunes_partitions(db):
     assert {r["event_id"] for r in got.collect()} == {0, 1}
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "_bucket" in plan, plan
+
+
+def test_compact_table_keyed_by_key(db):
+    """Rows carrying ``key`` instead of ``event_id`` are flushed twice,
+    then compact under the same sort rule they were written with and
+    read back unchanged."""
+    db.create_table("kv")
+    rows = [
+        {"ts": NOW + dt.timedelta(minutes=i), "key": f"k{i % 3}", "value": float(i)}
+        for i in range(6)
+    ]
+    for batch in (rows[:3], rows[3:]):
+        db.insert("kv", batch, now=NOW)
+        db.flush()
+    assert db.get_stats("kv")["disk_files"] >= 2
+    assert db.compact("kv") == 6
+    assert db.get_stats("kv")["disk_files"] == 1
+    got = db.query("kv", NOW, NOW + dt.timedelta(hours=1)).collect()
+    assert sorted((r["ts"], r["key"], r["value"]) for r in got) == sorted(
+        (r["ts"], r["key"], r["value"]) for r in rows
+    )
+
+
+def test_stream_ingested_table_works_through_facade(spark, db, tmp_path):
+    """The streaming sink writes the facade's layout: a table that
+    ingest.start_ingest filled under <data_dir>/<table>/data is queried
+    with partition pruning, compacted and cleaned up by ChronoSpark."""
+    src = str(tmp_path / "source")
+    catalog.table(spark, SF_SMOKE, "events").repartition(4).write.parquet(src)
+    db.create_table("events", ttl_seconds=2 * 24 * 3600)
+    data_dir = os.path.join(db.get_table("events")["path"], "data")
+    stream = ingest.read_event_stream(spark, src, max_files_per_trigger=1)
+    ingest.start_ingest(
+        stream, data_dir, str(tmp_path / "ckpt"), available_now=True
+    ).awaitTermination(120)
+    ev = spark.read.parquet(src)
+    n = ev.count()
+    lo = ev.agg(F.min("ts")).first()[0]
+    hi = lo + dt.timedelta(days=1)
+
+    got = db.query("events", lo, hi)
+    want = ev.filter(F.col("ts").between(lo, hi)).select("event_id")
+    assert {r["event_id"] for r in got.collect()} == {r[0] for r in want.collect()}
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters: [" in plan and writers.PARTITION_COL in plan, plan
+
+    assert db.compact("events") == n
+    assert db.get_stats("events")["total_disk_rows"] == n
+
+    days = sorted(writers.partitions(data_dir))
+    # the TTL cutoff falls on the second day: only the first is past it
+    now = dt.datetime.fromisoformat(days[1]) + dt.timedelta(days=2, hours=12)
+    assert db.cleanup("events", now=now) == [days[0]]
+    assert sorted(writers.partitions(data_dir)) == days[1:]
 
 
 def test_iter_query_streams_rows(db):

@@ -347,6 +347,27 @@ def test_winnow_fingerprints_match_reference_python(spark):
     assert got == expected
 
 
+def test_winnow_fingerprints_emit_no_null_fp_at_the_boundary(spark):
+    """winnow_fingerprints explodes with explode_outer, which is safe
+    only while its token-count pre-filter (>= k+w-1) holds exactly when
+    selected_fingerprints is non-empty. Pin that invariant at the
+    boundary: k+w-2 tokens emit no row, k+w-1 tokens emit fingerprints,
+    and no emitted row has a NULL fp."""
+    from chronobase_spark.dedup import winnow
+
+    for k, w in ((winnow.K, winnow.W), (3, 2)):
+        short, long_ = k + w - 2, k + w - 1
+        docs = spark.createDataFrame(
+            [
+                (1, " ".join(f"s{i}" for i in range(short))),
+                (2, " ".join(f"l{i}" for i in range(long_))),
+            ],
+            "doc_id long, text string",
+        )
+        rows = winnow.winnow_fingerprints(docs, k=k, w=w).collect()
+        assert rows and all(r["fp"] is not None for r in rows), (k, w, rows)
+        assert {r["doc"] for r in rows} == {2}, (k, w, rows)
+
 def test_winnow_dup_pairs_match_brute_force(spark):
     """The posting-list pair generation (r17: collect_list over the
     max_df-pruned postings + bounded explode, replacing the fp
@@ -1002,9 +1023,17 @@ def test_r18_tokenize_and_gram_rewrites_match_two_pass_forms(spark, docs):
             ("héllo wörld çafé",),
             ("a-b c_d e.f",),
             ("0 00 000 0a a0",),
+            # unicode whitespace: NO-BREAK SPACE and EM SPACE
+            ("no\u00a0break\u00a0\u00a0space",),
+            ("em\u2003space \u2003 mixed\u00a0\u2003end",),
+            # control characters: vertical tab, form feed, unit separator
+            ("vertical\x0btab\x0b\x0bx",),
+            ("ctl\x0cform\x1fsep \x0b",),
         ],
         "text string",
     )
+    carried = "".join(r[0] for r in adversarial.collect() if r[0])
+    assert all(c in carried for c in "\u00a0\u2003\x0b")
     for frame in (docs.select("text"), adversarial):
         mism = frame.select(
             tokens_old(F.col("text")).alias("ot"),

@@ -18,6 +18,7 @@ import ast
 import builtins
 import glob
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -94,6 +95,35 @@ def test_no_unresolved_names_anywhere():
     assert len(paths) > 20  # the glob actually found the repo
     bad = {os.path.relpath(p, REPO): m for p in paths if (m := _unresolved(p))}
     assert not bad, f"unresolved names: {bad}"
+
+
+def test_every_module_level_function_is_referenced():
+    """No function is defined but never called: every module-level
+    function in chronobase_spark/ must be named somewhere in the repo's
+    Python besides its own ``def`` — a call, an import, a registry
+    lookup or a cross-reference in another docstring all count.
+    Registered queries (decorated ``q_*`` functions) are exempt: the
+    registry reaches them through their decorator."""
+    sources = [
+        open(p).read()
+        for p in glob.glob(os.path.join(REPO, "**/*.py"), recursive=True)
+    ]
+    unreferenced = []
+    for p in sorted(
+        glob.glob(os.path.join(REPO, "chronobase_spark/**/*.py"), recursive=True)
+    ):
+        for node in ast.parse(open(p).read()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if node.decorator_list and node.name.startswith("q_"):
+                continue
+            word = re.compile(rf"\b{node.name}\b")
+            own_def = re.compile(rf"\bdef {node.name}\b")
+            if not any(
+                len(word.findall(s)) > len(own_def.findall(s)) for s in sources
+            ):
+                unreferenced.append(f"{os.path.relpath(p, REPO)}::{node.name}")
+    assert not unreferenced, f"functions nothing references: {unreferenced}"
 
 
 # --- broadcast-hint gate -------------------------------------------------

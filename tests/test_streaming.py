@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from chronobase_spark import catalog  # noqa: E402
+from chronobase_spark.sources.writers import PARTITION_COL  # noqa: E402
 from chronobase_spark.streaming import ingest, maintenance  # noqa: E402
 from tests.conftest import SF_SMOKE  # noqa: E402
 
@@ -41,7 +42,7 @@ def test_ingest_roundtrip_partitioned_by_date(spark, event_source, tmp_path):
     out = spark.read.parquet(table_dir)
     assert out.count() == src_count
     # partition dirs exist per day => time-range scans prune whole dirs
-    parts = [p.name for p in Path(table_dir).iterdir() if p.name.startswith("event_date=")]
+    parts = [p.name for p in Path(table_dir).iterdir() if p.name.startswith(f"{PARTITION_COL}=")]
     assert len(parts) >= 2
 
 
@@ -267,10 +268,10 @@ def test_compaction_preserves_rows_and_reduces_files(spark, event_source, tmp_pa
     parts = sorted(
         p.name.split("=", 1)[1]
         for p in Path(table_dir).iterdir()
-        if p.name.startswith("event_date=")
+        if p.name.startswith(f"{PARTITION_COL}=")
     )
     target = parts[0]
-    part_dir = Path(table_dir) / f"event_date={target}"
+    part_dir = Path(table_dir) / f"{PARTITION_COL}={target}"
     files_before = len(list(part_dir.glob("*.parquet")))
     n = maintenance.compact_partition(spark, table_dir, target)
     files_after = len(list(part_dir.glob("*.parquet")))
@@ -290,7 +291,7 @@ def test_retention_drops_old_partitions(spark, event_source, tmp_path):
     parts = sorted(
         p.name.split("=", 1)[1]
         for p in Path(table_dir).iterdir()
-        if p.name.startswith("event_date=")
+        if p.name.startswith(f"{PARTITION_COL}=")
     )
     cutoff = parts[1]
     dropped = maintenance.retention_sweep(table_dir, cutoff)
@@ -298,7 +299,7 @@ def test_retention_drops_old_partitions(spark, event_source, tmp_path):
     remaining = sorted(
         p.name.split("=", 1)[1]
         for p in Path(table_dir).iterdir()
-        if p.name.startswith("event_date=")
+        if p.name.startswith(f"{PARTITION_COL}=")
     )
     assert remaining == parts[1:]
 
@@ -522,30 +523,30 @@ def test_compaction_crash_recovery_restores_partition(spark, event_source, tmp_p
 
     tdir = str(tmp_path / "crash_table")
     ev = spark.read.parquet(event_source).limit(300)
-    ev.withColumn("event_date", F.to_date("ts")).write.partitionBy(
-        "event_date"
+    ev.withColumn(PARTITION_COL, F.to_date("ts")).write.partitionBy(
+        PARTITION_COL
     ).parquet(tdir)
     root = _Path(tdir)
-    part = sorted(p for p in root.iterdir() if p.name.startswith("event_date="))[0]
+    part = sorted(p for p in root.iterdir() if p.name.startswith(f"{PARTITION_COL}="))[0]
     value = part.name.split("=", 1)[1]
     n_before = spark.read.parquet(str(part)).count()
 
     # simulate the mid-swap crash state: partition renamed aside, no new copy
-    part.rename(root / f".compact_old_event_date={value}")
+    part.rename(root / f".compact_old_{PARTITION_COL}={value}")
     assert not part.exists()
 
     n = maintenance.compact_partition(spark, tdir, value)
     assert n == n_before
     assert part.exists()
     assert spark.read.parquet(str(part)).count() == n_before
-    assert not (root / f".compact_old_event_date={value}").exists()
-    assert not (root / f".compact_new_event_date={value}").exists()
+    assert not (root / f".compact_old_{PARTITION_COL}={value}").exists()
+    assert not (root / f".compact_new_{PARTITION_COL}={value}").exists()
 
     # superseded-old state: both present -> old dropped, data intact
-    _shutil.copytree(part, root / f".compact_old_event_date={value}")
+    _shutil.copytree(part, root / f".compact_old_{PARTITION_COL}={value}")
     n2 = maintenance.compact_partition(spark, tdir, value)
     assert n2 == n_before
-    assert not (root / f".compact_old_event_date={value}").exists()
+    assert not (root / f".compact_old_{PARTITION_COL}={value}").exists()
 
 
 def test_streaming_counter_rate_matches_batch(spark, tmp_path):
